@@ -8,7 +8,8 @@ order (P7), uppercases names (P11), and MERGEs into the warehouse
 (A7/A8/S14). In Spark, S11-S13+A5 are one `read.parquet(prefix)` call —
 listing, `_SUCCESS`/`_temporary` filtering, and typed partition
 discovery are built into the file index — and the rest are the
-column-level utilities below composed by `warehouse_load`.
+column-level utilities below composed by `warehouse_load` (P11 is a
+plain `toDF` rename and needs no helper).
 
 Scale: the reference re-reads the FULL prefix every run and relies on
 MERGE idempotency ("incremental" by rescan). `warehouse_load` keeps
@@ -34,12 +35,6 @@ def read_partitioned_prefix(spark: SparkSession, path: str) -> DataFrame:
     values come back typed (the reference's path-parsing returns strings
     — load_fraud_records...py:128-141)."""
     return spark.read.parquet(path)
-
-
-def uppercase_columns(df: DataFrame) -> DataFrame:
-    """P11: warehouse-style column-name normalization
-    (load_fraud_records...py:193)."""
-    return df.toDF(*[c.upper() for c in df.columns])
 
 
 def pad_missing_columns(df: DataFrame, required: StructType) -> DataFrame:

@@ -1429,35 +1429,7 @@ def _profile_sql() -> str:
 def q_doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text-analysis profile: token counts, punct/stopword ratios,
     language-ID heuristic, rolling-hash fingerprint — one scan, no shuffle."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = F.col("text")
-    # Staged tokenization: Catalyst inlines shared expressions at every
-    # reference, so project the token arrays and language scores once
-    # and let every signal read attributes (8x measured on repetition).
-    # Spread an under-split scan first: the min-md5 fingerprint fold is
-    # ~2 s serial on one split at sf0.1, 0.25 s spread (measured r13).
-    staged = spread_input(docs.select("doc_id", "text")).select(
-        "doc_id", "text", TS.tokens(t).alias("__toks"),
-        TS.tokens(F.lower(t)).alias("__ltoks"),
-    )
-    scored = staged.select(
-        "doc_id", "text", "__toks",
-        *[
-            c.alias(f"__s_{lang}")
-            for lang, c in TS.lang_scores(t, ltoks=F.col("__ltoks")).items()
-        ],
-    )
-    qc = TS.quality_columns(t, toks=F.col("__toks"))
-    scores = {lang: F.col(f"__s_{lang}") for lang in TS.LANG_STOPWORDS}
-    return scored.select(
-        "doc_id",
-        F.size("__toks").alias("n_tokens"),
-        TS.wordpiece_count(t).alias("n_wordpieces"),
-        qc["punct_ratio"].alias("punct_ratio"),
-        qc["stopword_ratio"].alias("stopword_ratio"),
-        TS.lang_id(t, scores=scores).alias("lang_pred"),
-        TS.fingerprint(t).alias("fingerprint"),
-    )
+    return TS.text_profile(load_table(spark, sf_dir, "documents")).drop("quality_score")
 
 
 def _md5_bucket_sql(id_expr: str, mod: int) -> str:
@@ -3208,7 +3180,8 @@ def q_warehouse_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
     # Cache the enriched table: both load slices derive from it, and
-    # without materialization the two writes re-run the enrichment.
+    # without materialization each branch of the union write re-runs
+    # the enrichment.
     enriched = q_fraud_enrich(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
     # raw-scan probe: enrichment is row-preserving, so emptiness is
     # equivalent and the guard skips the broadcast-build limit-1 job
@@ -3237,8 +3210,8 @@ def q_warehouse_load(spark: SparkSession, sf_dir: str) -> DataFrame:
         *FRAUD_PARTITIONS,
         F.pmod(F.xxhash64("transaction_id", "load_seq"), F.lit(8)),
     ).write.mode("append").partitionBy(*FRAUD_PARTITIONS).parquet(tmp)
-    # Both consumers (the two writes) have materialized — release the
-    # cache NOW; the returned frame reads the written parquet, so
+    # Its only consumer (the one union write) has materialized — release
+    # the cache NOW; the returned frame reads the written parquet, so
     # nothing downstream needs it (shared-session leak rule, ADVICE r3).
     enriched.unpersist()
     loaded = L.warehouse_load(
@@ -4481,7 +4454,7 @@ def q_doc_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage swapped from exact Jaccard to minhash_lsh_pairs."""
     docs = load_table(spark, sf_dir, "documents")
     t = F.col("text")
-    # Staged tokenization (see doc_profile): one split per row, not one
+    # Staged tokenization (see TS.text_profile): one split per row, not one
     # per token-array reference. Spread an under-split scan before the
     # heavy per-doc stage (no-op at production split counts).
     scored = spread_input(docs.select("doc_id", "text")).select(

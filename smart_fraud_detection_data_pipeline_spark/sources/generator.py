@@ -1,4 +1,4 @@
-"""S1: deterministic synthetic transaction generator (batch + streaming).
+"""S1: deterministic synthetic transaction generator.
 
 Reference parity: transaction_producer.py:12-22 emits one random
 transaction per 0.5 s — id "T"+7 digits, user_id 1-2000, product_id
@@ -7,10 +7,10 @@ payment_method ∈ {credit_card,debit_card,cash,paypal}, country ∈
 {USA,UK,Germany,India}, ISO-8601 UTC event time.
 
 Engine version: the same value domains, but generated AS A PLAN —
-`spark.range(n)` + seeded `rand()` column expressions for batch, or the
-rate source for streaming. Fully distributed (no driver-side row loop),
-deterministic under a seed, and arbitrarily scalable: generating 10^12
-rows is just `spark.range(10**12)` across executors.
+`spark.range(n)` + seeded `rand()` column expressions. Fully distributed
+(no driver-side row loop), deterministic under a seed, and arbitrarily
+scalable: generating 10^12 rows is just `spark.range(10**12)` across
+executors.
 """
 
 from __future__ import annotations
@@ -31,12 +31,17 @@ def _pick(arr: tuple[str, ...], r: F.Column) -> F.Column:
     )
 
 
-def _transaction_columns(df: DataFrame, id_col: str, ts_col) -> DataFrame:
-    """Map a numbered row stream to the reference transaction schema."""
+def synthetic_transactions(spark: SparkSession, n_rows: int) -> DataFrame:
+    """Batch generator: n_rows transactions at the producer's 2 rows/s
+    cadence starting at BASE_TS. Deterministic per (n_rows, seed)."""
     seeded = [F.rand(seed=41 + i) for i in range(5)]
-    return df.select(
+    ts = F.timestamp_seconds(
+        F.unix_timestamp(F.lit(BASE_TS).cast("timestamp_ntz"))
+        + (F.col("id") / ROWS_PER_SECOND).cast("long")
+    ).cast("timestamp_ntz")
+    return spark.range(n_rows).select(
         F.concat(
-            F.lit("T"), (F.col(id_col) % 9000000 + 1000000).cast("string")
+            F.lit("T"), (F.col("id") % 9000000 + 1000000).cast("string")
         ).alias("transaction_id"),
         ((seeded[0] * 2000).cast("int") + 1).alias("user_id"),
         ((seeded[1] * 500).cast("int") + 1).alias("product_id"),
@@ -46,31 +51,5 @@ def _transaction_columns(df: DataFrame, id_col: str, ts_col) -> DataFrame:
         F.round(seeded[3] * (5000 - 10) + 10, 2).alias("amount"),
         _pick(PAYMENT_METHODS, seeded[4]).alias("payment_method"),
         _pick(COUNTRIES, F.rand(seed=48)).alias("country"),
-        ts_col.alias("timestamp"),
+        ts.alias("timestamp"),
     )
-
-
-def synthetic_transactions(spark: SparkSession, n_rows: int) -> DataFrame:
-    """Batch generator: n_rows transactions at the producer's 2 rows/s
-    cadence starting at BASE_TS. Deterministic per (n_rows, seed)."""
-    base = spark.range(n_rows)
-    ts = F.timestamp_seconds(
-        F.unix_timestamp(F.lit(BASE_TS).cast("timestamp_ntz"))
-        + (F.col("id") / ROWS_PER_SECOND).cast("long")
-    ).cast("timestamp_ntz")
-    return _transaction_columns(base, "id", ts)
-
-
-def synthetic_transaction_stream(
-    spark: SparkSession, rows_per_second: int = ROWS_PER_SECOND
-) -> DataFrame:
-    """Streaming generator on the rate source (S1's streaming form).
-
-    Note: rand() re-evaluates per micro-batch so the stream is not
-    replay-deterministic (like the reference's RNG); use the batch
-    generator for reproducible fixtures.
-    """
-    rate = spark.readStream.format("rate").option(
-        "rowsPerSecond", str(rows_per_second)
-    ).load()
-    return _transaction_columns(rate, "value", F.col("timestamp"))

@@ -5,7 +5,6 @@ from __future__ import annotations
 from pyspark.sql import Row
 
 from smart_fraud_detection_data_pipeline_spark.operators.dedup import (
-    dedup_exact,
     dedup_keep_last,
     union_slices,
 )
@@ -34,12 +33,6 @@ def test_union_slices_by_name(spark):
     b = spark.createDataFrame([Row(y="b", x=2)])  # reordered columns
     out = union_slices(a, b).orderBy("x").collect()
     assert [(r.x, r.y) for r in out] == [(1, "a"), (2, "b")]
-
-
-def test_dedup_exact(spark):
-    df = spark.createDataFrame([Row(a=1, b=2), Row(a=1, b=2), Row(a=1, b=3)])
-    assert dedup_exact(df).count() == 2
-    assert dedup_exact(df, ["a"]).count() == 1
 
 
 def test_merge_upsert_semantics(spark):

@@ -11,11 +11,6 @@ from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 from smart_fraud_detection_data_pipeline_spark.operators import loaders as L
 
 
-def test_uppercase_columns(spark):
-    df = spark.createDataFrame([Row(a=1, b_c="x")])
-    assert L.uppercase_columns(df).columns == ["A", "B_C"]
-
-
 def test_pad_missing_columns_typed_nulls(spark):
     df = spark.createDataFrame([Row(a=1)])
     required = StructType(

@@ -3,13 +3,17 @@
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB over the same sf dir, then compares row count, schema, and
 order-insensitive values EXACTLY (the driver hashes values, so any
-floating-point drift is a failure here too).
+floating-point drift is a failure here too). The --json record carries
+each Spark result's order-insensitive md5 (`result_md5`), so two runs'
+artifacts prove a refactor left every result unchanged, rows-only
+queries included.
 
 Usage: python tools/oracle_check.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 import time
@@ -35,6 +39,11 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
     key = df.astype(str)
     order = key.sort_values(by=list(df.columns), kind="mergesort").index
     return df.loc[order].reset_index(drop=True)
+
+
+def result_md5(df: pd.DataFrame) -> str:
+    """md5 of the canonical (column- and row-sorted) CSV rendering."""
+    return hashlib.md5(_normalize(df).to_csv(index=False).encode()).hexdigest()
 
 
 def compare(spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> list[str]:
@@ -98,7 +107,7 @@ def main() -> int:
             print(f"[rows-only] {name}: {len(sdf)} rows ({t1 - t0:.1f}s)")
             results[name] = {
                 "status": "rows_only", "spark_rows": len(sdf),
-                "sec": round(t1 - t0, 2),
+                "sec": round(t1 - t0, 2), "result_md5": result_md5(sdf),
             }
             continue
         try:
@@ -120,6 +129,7 @@ def main() -> int:
             "status": "fail" if problems else "ok",
             "spark_rows": len(sdf), "oracle_rows": len(odf),
             "sec": round(t1 - t0, 2), "problems": problems,
+            "result_md5": result_md5(sdf),
         }
     if json_out:
         import json
