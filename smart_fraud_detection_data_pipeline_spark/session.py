@@ -8,6 +8,31 @@ UTC ISO strings — transaction_producer.py:21), Arrow for any Pandas UDF
 exchange, and an explicit shuffle-partition count sized to the local test
 harness (on a real cluster this is overridden per-job or left to AQE's
 ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``).
+
+Sessions on a local master get two JVM-side defaults as well (a
+caller's ``extra_conf`` still wins):
+
+- ``spark.sql.streaming.checkpointFileManagerClass`` is the
+  ``FileSystem``-based checkpoint manager. Spark's default
+  ``FileContext`` manager calls ``getFileLinkStatus`` on every atomic
+  rename, and without the native Hadoop library each call on a
+  ``file:`` path forks a ``readlink`` process. Every trigger writes an
+  offset log, a commit log and state files, so a streaming query paid
+  that fork on each of them. POSIX ``rename`` is atomic, so the offset
+  and commit logs keep their exactly-once contract; Spark's checkpoint
+  checksum layer still wraps the new manager.
+- ``spark.driver.defaultJavaOptions`` caps the JIT at two compiler
+  threads (one C1, one C2), on hosts with at most four CPUs only.
+  ``local[n]`` already gives every core to a task slot, and with JDK
+  17's default of three compiler threads on four cores the C2 threads
+  took 12-18 of a warm 4-file streaming drain's 25-30 CPU seconds. On
+  larger hosts the JVM picks more compiler threads and the cap's effect
+  on warm-up has not been measured, so it is left off there. It is the
+  *default* Java options key, so a caller's ``extraJavaOptions`` adds
+  to it instead of replacing it; a value an administrator put under
+  ``spark.driver.defaultJavaOptions`` in ``spark-defaults.conf`` is
+  replaced by it, as by any builder conf (pass the key in
+  ``extra_conf`` to keep both).
 """
 
 from __future__ import annotations
@@ -42,6 +67,15 @@ DEFAULT_CONF: dict[str, str] = {
     # default; read as long nanos and convert (sources.tables) — the data
     # carries only microsecond precision, so the conversion is lossless.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Generated-class cache (static conf, default 100 entries). One
+    # perfbench query_mix pass compiles 130 classes, so at 100 each warm
+    # pass recompiled 34-80 evicted ones (0-4 with the cap below).
+    # A fresh session running one full bench.py pass at sf0.1 compiles
+    # 2,256 distinct classes (the CodegenMetrics compilation-time
+    # histogram count, measured with no cap in force); the cap sits
+    # above that so a long-lived session compiles each class once. The
+    # size was chosen and measured on local sessions.
+    "spark.sql.codegen.cache.maxEntries": "3000",
 }
 
 
@@ -198,6 +232,16 @@ def get_spark(
                 mrs = f"{max(2048, mib // 2)}m"
         if mrs is not None:
             conf.setdefault("spark.driver.maxResultSize", mrs)
+        # Fork-free checkpoint writes and, on the host size it was
+        # measured on, a two-thread JIT budget; see the module docstring.
+        conf.setdefault(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
+        cores = os.cpu_count()
+        if cores is not None and cores <= 4:
+            conf.setdefault("spark.driver.defaultJavaOptions", "-XX:CICompilerCount=2")
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

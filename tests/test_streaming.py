@@ -284,6 +284,50 @@ def test_checkpoint_resume_exactly_once(spark, tmp_path):
     assert result.select("transaction_id").distinct().count() == result.count()
 
 
+def test_failed_trigger_replays_exactly_once(spark, tmp_path):
+    """A trigger that fails after its offsets are logged but before its
+    commit is replayed on restart, once, under the FileSystem-based
+    checkpoint manager the session runs with: the offset log holds
+    batch 1 and the commit log does not, and the restarted query
+    writes every transaction exactly once."""
+    from pyspark.errors import StreamingQueryException
+
+    from smart_fraud_detection_data_pipeline_spark.streaming import sinks as SK
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    tx = synthetic_transactions(spark, 600).cache()
+    part = F.col("transaction_id").substr(2, 7).cast("long") % 3
+    for k in range(3):
+        tx.where(part == k).coalesce(1).write.mode("append").parquet(src)
+    schema = spark.read.parquet(src).schema
+    sink = SK.parquet_batch_sink(out, partitions=None)
+
+    def failing(batch_df, batch_id):
+        if batch_id == 1:
+            raise RuntimeError("injected failure in trigger 1")
+        sink(batch_df, batch_id)
+
+    def start(handler):
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src)
+        return SK.start_foreach_batch(
+            stream.select("transaction_id", "user_id", "amount"), handler, ckpt,
+            available_now=True,
+        )
+
+    with pytest.raises(StreamingQueryException, match="injected failure"):
+        start(failing).awaitTermination(60)
+    assert os.path.exists(os.path.join(ckpt, "offsets", "1"))
+    assert not os.path.exists(os.path.join(ckpt, "commits", "1"))
+    assert spark.read.parquet(out).count() == 200  # trigger 0's file only
+
+    SK.await_or_raise(start(sink), 120)
+    result = spark.read.parquet(out)
+    assert result.count() == 600
+    assert result.select("transaction_id").distinct().count() == 600
+
+
 def test_drop_duplicates_within_watermark_across_batches(spark, tmp_path):
     """At-least-once replay: rows re-delivered in a LATER micro-batch
     must be emitted exactly once. Covers both absorption paths — keyed
